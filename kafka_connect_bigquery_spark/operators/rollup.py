@@ -16,6 +16,14 @@ update_preimage. Cost follows the change volume and the number of
 aggregated first; the final merge joins the rollup only on touched
 keys — broadcast when the delta is small).
 
+``RollupMaintainer`` applies this per micro-batch behind a durable
+applied-version cursor, storing the rollup unpartitioned (one row per
+group, no ingestion-time column) so every refresh after the first is
+the delta merge above, never a rebuild. ``SinkPipeline.merge_batch``
+reads the CDC span once per batch and cursor and hands it to every
+consumer of the table (this rollup and ``sketch.SketchMaintainer``
+alike, both ``CdcMaintainer``s).
+
 Exactness: double sums are not associative, so a maintained sum would
 drift from a recomputed one. Contributions should therefore be integer
 or decimal typed — `quantized()` maps a double onto 1e-4 quanta as
@@ -107,8 +115,12 @@ def apply_rollup_delta(
     rollup is the *aggregate* — group-count sized, not corpus sized;
     when even that is too big, store the rollup bucketed by ``keys``
     and apply the (tiny) delta per-bucket via the warehouse MERGE
-    machinery instead."""
-    measure_cols = [c for c in rollup.columns if c not in keys]
+    machinery instead.
+
+    The measure columns come from the delta, so a stored rollup
+    carrying extra columns (a legacy ingestion-time ``p_date``) drops
+    them here and heals on its next refresh."""
+    measure_cols = [c for c in delta.columns if c not in keys]
     merged = rollup.select(*keys, *measure_cols).unionByName(
         delta.select(*keys, *measure_cols)
     )
@@ -118,20 +130,100 @@ def apply_rollup_delta(
     return out.filter(F.col(count_measure) > 0)
 
 
-class RollupMaintainer:
+class CdcMaintainer:
+    """The cursor protocol shared by the IVM consumers of a bucketed
+    source table (``RollupMaintainer`` here, ``sketch.SketchMaintainer``):
+    each keeps a materialized table fresh by consuming the warehouse
+    CDC feed.
+
+    Crash tolerance via a durable cursor: the maintained table's layout
+    manifest records the source generation it has applied
+    (``CURSOR_KEY``). Each refresh applies the CDC span cursor→current,
+    so a crash between a merge commit and its refresh loses nothing —
+    the next refresh covers both batches. A replayed idempotent merge
+    contributes an empty row-diff, so refresh is replay-safe too. A
+    consumer whose cursor snapshot has been pruned (it lagged past
+    snapshot_retention), or whose table is missing, rebuilds in full —
+    correct, just not incremental. Every other failure raises.
+
+    Subclasses set ``CURSOR_KEY`` and provide ``_rebuild()`` (the
+    materialized frame from the whole source) and ``_apply(changes)``
+    (the maintained frame from a ``read_changes(images="both")`` span).
+    """
+
+    CURSOR_KEY = ""
+
+    def __init__(self, warehouse, source_table: str, table: str) -> None:
+        self.wh = warehouse
+        self.source = source_table
+        self.table = table
+
+    def _rebuild(self) -> DataFrame:
+        raise NotImplementedError
+
+    def _apply(self, changes: DataFrame) -> DataFrame:
+        raise NotImplementedError
+
+    def cursor(self) -> int | None:
+        """The source generation this consumer has applied (None before
+        its first refresh)."""
+        last = self.wh.table_property(self.table, self.CURSOR_KEY)
+        return None if last is None else int(last)
+
+    def refresh(
+        self, changes: DataFrame | None = None, *, to_version: int | None = None
+    ) -> int:
+        """Bring the materialized table up to the source's current
+        generation (or ``to_version``). Returns the number of source
+        versions applied (0 = current).
+
+        ``changes``: the ``read_changes(images="both")`` span from this
+        consumer's cursor to ``to_version``, when a caller reads it once
+        for several consumers (``SinkPipeline.merge_batch``); without
+        it, refresh reads its own span."""
+        cur = to_version
+        if cur is None:
+            cur = self.wh.layout_meta(self.source).get("generation")
+            if cur is None:
+                raise ValueError(
+                    f"source {self.source} is not a bucketed table; "
+                    f"{type(self).__name__} consumes the bucketed-MERGE CDC feed"
+                )
+        cur = int(cur)
+        last = self.cursor()
+        if last == cur:
+            return 0
+        if (
+            last is None
+            or last not in self.wh.snapshots(self.source)
+            or not self.wh.exists(self.table)
+        ):
+            out = self._rebuild()
+        else:
+            if changes is None:
+                changes = self.wh.read_changes(
+                    self.source, from_version=last, to_version=cur, images="both"
+                )
+            out = self._apply(changes)
+        # the source snapshot is immutable, so materialize (one pass)
+        # before the overwrite drops the old files out from under the
+        # lazily-read plan
+        out = out.localCheckpoint(eager=True)
+        from kafka_connect_bigquery_spark.sinks.warehouse import TableSpec
+
+        # explicit NONE grain: a maintained table must not grow an
+        # ingestion-time partition column
+        self.wh.overwrite(out, self.table, TableSpec(partition_grain="NONE"))
+        self.wh.set_table_property(self.table, self.CURSOR_KEY, cur)
+        return cur - (last if last is not None else cur - 1)
+
+
+class RollupMaintainer(CdcMaintainer):
     """Keeps a materialized rollup table fresh against a bucketed
     source table by consuming the warehouse CDC feed — the IVM consumer
-    a streaming MERGE pipeline attaches per micro-batch.
-
-    Crash tolerance via a durable cursor: the rollup's layout manifest
-    records the source generation it has applied
-    (``rollup_applied_version``). Each refresh applies the CDC span
-    cursor→current, so a crash between a merge commit and its rollup
-    refresh loses nothing — the next refresh covers both batches. A
-    replayed idempotent merge contributes an empty row-diff, so
-    refresh is replay-safe too. If the cursor's snapshot has been
-    pruned (consumer lagged past snapshot_retention), refresh falls
-    back to a full rebuild — correct, just not incremental.
+    a streaming MERGE pipeline attaches per micro-batch. The rollup is
+    stored unpartitioned, one row per group; its durable cursor is
+    ``rollup_applied_version`` (protocol in ``CdcMaintainer``).
     """
 
     CURSOR_KEY = "rollup_applied_version"
@@ -146,9 +238,7 @@ class RollupMaintainer:
         *,
         count_measure: str,
     ) -> None:
-        self.wh = warehouse
-        self.source = source_table
-        self.table = rollup_table
+        super().__init__(warehouse, source_table, rollup_table)
         self.keys = keys
         self.measures = measures
         self.count_measure = count_measure
@@ -156,41 +246,10 @@ class RollupMaintainer:
     def _rebuild(self) -> DataFrame:
         return build_rollup(self.wh.read(self.source), self.keys, self.measures)
 
-    def refresh(self) -> int:
-        """Bring the rollup up to the source's current generation.
-        Returns the number of source versions applied (0 = current)."""
-        cur = self.wh.layout_meta(self.source).get("generation")
-        if cur is None:
-            raise ValueError(
-                f"source {self.source} is not a bucketed table; rollup "
-                "maintenance consumes the bucketed-MERGE CDC feed"
-            )
-        cur = int(cur)
-        last = self.wh.table_property(self.table, self.CURSOR_KEY)
-        if last is not None and int(last) == cur:
-            return 0
-        if last is None:
-            out = self._rebuild()
-        else:
-            try:
-                changes = self.wh.read_changes(
-                    self.source, from_version=int(last), images="both"
-                )
-                delta = rollup_delta(changes, self.keys, self.measures)
-                out = apply_rollup_delta(
-                    self.wh.read(self.table),
-                    delta,
-                    self.keys,
-                    count_measure=self.count_measure,
-                )
-            except Exception:
-                # cursor snapshot pruned (lagged past retention) or the
-                # rollup table is missing — rebuild from the source
-                out = self._rebuild()
-        # the source snapshot is immutable, so materialize (one pass)
-        # before the overwrite drops the old rollup files out from
-        # under the lazily-read plan
-        out = out.localCheckpoint(eager=True)
-        self.wh.overwrite(out, self.table)
-        self.wh.set_table_property(self.table, self.CURSOR_KEY, cur)
-        return cur - (int(last) if last is not None else cur - 1)
+    def _apply(self, changes: DataFrame) -> DataFrame:
+        return apply_rollup_delta(
+            self.wh.read(self.table),
+            rollup_delta(changes, self.keys, self.measures),
+            self.keys,
+            count_measure=self.count_measure,
+        )

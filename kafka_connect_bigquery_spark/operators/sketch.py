@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from kafka_connect_bigquery_spark.operators.rollup import CdcMaintainer
+
 DEPTH = 4
 WIDTH = 256
 
@@ -845,7 +847,7 @@ def ams_f2_estimate(sketch: DataFrame, *, depth: int = AMS_DEPTH) -> DataFrame:
     )
 
 
-class SketchMaintainer:
+class SketchMaintainer(CdcMaintainer):
     """Keeps a materialized per-group sketch table (HLL registers, KMV
     minima, count-min cells, or fixed-grid histogram buckets) fresh
     against a bucketed source table by
@@ -855,14 +857,11 @@ class SketchMaintainer:
     ``refresh()`` protocol, the pipeline does not care what the
     maintainer materializes).
 
-    Crash tolerance via the same durable cursor: the sketch table's
-    layout manifest records the applied source generation
-    (``sketch_applied_version``); each refresh applies the CDC span
+    Same durable-cursor protocol (``rollup.CdcMaintainer``), cursor
+    ``sketch_applied_version``; each refresh applies the CDC span
     cursor→current through ``hll_maintain_grouped`` /
     ``kmv_maintain_grouped`` (additions merge at CDC cost; groups that
-    lost a contribution rebuild from only the affected groups). A
-    pruned cursor snapshot (consumer lagged past snapshot_retention)
-    falls back to a full rebuild — correct, just not incremental.
+    lost a contribution rebuild from only the affected groups).
     Maintained state is provably equal to a direct rebuild (the
     operator-level tests pin it with poisoned-current checks).
     """
@@ -888,9 +887,7 @@ class SketchMaintainer:
     ) -> None:
         if kind not in ("hll", "kmv", "cm", "hist"):
             raise ValueError(f"unknown sketch kind: {kind!r}")
-        self.wh = warehouse
-        self.source = source_table
-        self.table = sketch_table
+        super().__init__(warehouse, source_table, sketch_table)
         self.col = col
         self.group_cols = group_cols
         self.kind = kind
@@ -917,60 +914,27 @@ class SketchMaintainer:
             )
         return kmv_build_grouped(src, self.col, self.group_cols, k=self.k)
 
-    def refresh(self) -> int:
-        """Bring the sketch table up to the source's current generation.
-        Returns the number of source versions applied (0 = current)."""
-        cur = self.wh.layout_meta(self.source).get("generation")
-        if cur is None:
-            raise ValueError(
-                f"source {self.source} is not a bucketed table; sketch "
-                "maintenance consumes the bucketed-MERGE CDC feed"
+    def _apply(self, changes: DataFrame) -> DataFrame:
+        stored = self.wh.read(self.table)
+        if self.kind == "cm":
+            # linear sketch: no rebuild path, no current-source read
+            return count_min_maintain_grouped(
+                stored, changes, self.col, self.group_cols,
+                depth=self.depth, width=self.width,
             )
-        cur = int(cur)
-        last = self.wh.table_property(self.table, self.CURSOR_KEY)
-        if last is not None and int(last) == cur:
-            return 0
-        if last is None:
-            out = self._rebuild()
-        else:
-            try:
-                changes = self.wh.read_changes(
-                    self.source, from_version=int(last), images="both"
-                )
-                stored = self.wh.read(self.table)
-                current = self.wh.read(self.source)
-                if self.kind == "hll":
-                    out = hll_maintain_grouped(
-                        stored, changes, self.col, self.group_cols,
-                        current=current, p=self.p,
-                    )
-                elif self.kind == "cm":
-                    # linear sketch: no rebuild path, `current` unused
-                    out = count_min_maintain_grouped(
-                        stored, changes, self.col, self.group_cols,
-                        depth=self.depth, width=self.width,
-                    )
-                elif self.kind == "hist":
-                    # linear sketch: no rebuild path, `current` unused
-                    out = hist_maintain_grouped(
-                        stored, changes, self.col, self.group_cols,
-                        lo=self.lo, hi=self.hi, nbins=self.nbins,
-                    )
-                else:
-                    out = kmv_maintain_grouped(
-                        stored, changes, self.col, self.group_cols,
-                        current=current, k=self.k,
-                    )
-            except Exception:
-                # cursor snapshot pruned or sketch table missing
-                out = self._rebuild()
-        # materialize before the overwrite drops the old sketch files
-        # out from under the lazily-read plan
-        out = out.localCheckpoint(eager=True)
-        from kafka_connect_bigquery_spark.sinks.warehouse import TableSpec
-
-        # explicit NONE grain: a register table must not grow an
-        # ingestion-time partition column
-        self.wh.overwrite(out, self.table, TableSpec(partition_grain="NONE"))
-        self.wh.set_table_property(self.table, self.CURSOR_KEY, cur)
-        return cur - (int(last) if last is not None else cur - 1)
+        if self.kind == "hist":
+            # linear sketch: no rebuild path, no current-source read
+            return hist_maintain_grouped(
+                stored, changes, self.col, self.group_cols,
+                lo=self.lo, hi=self.hi, nbins=self.nbins,
+            )
+        current = self.wh.read(self.source)
+        if self.kind == "hll":
+            return hll_maintain_grouped(
+                stored, changes, self.col, self.group_cols,
+                current=current, p=self.p,
+            )
+        return kmv_maintain_grouped(
+            stored, changes, self.col, self.group_cols,
+            current=current, k=self.k,
+        )

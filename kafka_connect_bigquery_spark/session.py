@@ -143,23 +143,20 @@ def read_table(spark: SparkSession, sf_dir: str, name: str):
             # engine-wide TimestampType, instants taken as UTC (the session
             # timezone get_spark() pins).
             spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-            # Driver-side py4j diet (see get_spark): also applied here so
-            # the driver harness's plain conf-free session gets it — it
-            # builds hundreds of plans per correctness run. Lazily read
-            # (and cached) by pyspark at the first wrapped API call, so
-            # setting it at the read boundary is early enough.
-            spark.conf.set(
-                "spark.python.sql.dataFrameDebugging.enabled", "false"
-            )
-            # pyspark caches the flag at the first wrapped API call; a
-            # plain harness session may have warmed that cache True
-            # before reaching this read boundary — drop it so the next
-            # call re-reads the conf just set above.
-            import pyspark.errors.utils as _eu
-
-            _eu._enable_debugging_cache = None
         except Exception:  # pragma: no cover - conf is runtime-settable in 4.x
             pass
+        # Driver-side py4j diet (see get_spark), also for the driver
+        # harness's plain conf-free session — it builds hundreds of plans
+        # per correctness run. On PySpark 4.1.2 (verified) the conf is
+        # STATIC: setting it on a live session raises
+        # CANNOT_MODIFY_STATIC_CONFIG. PySpark reads it once into a
+        # private module cache at the first wrapped API call and never
+        # again, so the cut is made on that cache; a PySpark without it
+        # keeps its default rather than gaining a stray attribute.
+        import pyspark.errors.utils as _eu
+
+        if hasattr(_eu, "_enable_debugging_cache"):
+            _eu._enable_debugging_cache = False
         _NANOS_CONF_SESSIONS.add(spark)
 
     cache = _TABLE_CACHE.setdefault(spark, {})

@@ -1044,16 +1044,7 @@ class Warehouse:
                 "and predates manifest schemas — cannot derive a schema"
             )
         paths = [self._bucket_gen_dir(table, b, g) for b, g in gens.items()]
-        # mergeSchema: after a merge-path schema evolution only the
-        # touched buckets carry the new columns on disk; the union view
-        # fills the rest with NULLs (no O(table) rewrite at evolve time).
-        # Then conform to the manifest schema: evolution is a metadata
-        # commit independent of row content (SchemaManager.java:264-281),
-        # so a column added by a batch with zero surviving rows exists in
-        # NO footer — only the manifest knows it (fuzz-found: tombstone-
-        # only evolving batch for absent keys lost the new column).
-        df = self.spark.read.option("mergeSchema", "true").parquet(*paths)
-        return self._conform_to_stored(df, meta)
+        return self._read_generations(paths, meta)
 
     # -- deferred deletes (merge-on-read, flat tables) --------------------
     def delete_where(
@@ -1401,6 +1392,26 @@ class Warehouse:
         extras = [F.col(c) for c in df.columns if c not in stored_names]
         return df.select(*cols, *extras)
 
+    def _read_generations(self, paths: list[str], meta: dict) -> DataFrame:
+        """Read bucket generation dirs (or files inside them) in the
+        manifest's logical schema. After a merge-path schema evolution
+        only the touched buckets carry the new columns on disk, and a
+        column added by a batch with zero surviving rows exists in NO
+        footer — evolution is a metadata commit independent of row
+        content (SchemaManager.java:264-281). An explicit read schema
+        makes the parquet reader fill every footer-missing column and
+        nested subfield with NULLs per file, so the manifest alone
+        shapes the frame: no footer-merging job at plan time, and no
+        O(table) rewrite at evolve time. Manifests that predate stored
+        schemas fall back to merging the footers."""
+        schema_json = meta.get("schema")
+        if not schema_json:
+            return self.spark.read.option("mergeSchema", "true").parquet(*paths)
+        import json
+
+        stored = T.StructType.fromJson(json.loads(schema_json))
+        return self.spark.read.schema(stored).parquet(*paths)
+
     def read_changes(
         self,
         table: str,
@@ -1446,48 +1457,39 @@ class Warehouse:
             ]
 
         n_paths, o_paths = _side_paths(ng), _side_paths(og)
-        n_df = (
-            self.spark.read.option("mergeSchema", "true").parquet(*n_paths)
-            if n_paths
-            else None
-        )
-        o_df = (
-            self.spark.read.option("mergeSchema", "true").parquet(*o_paths)
-            if o_paths
-            else None
-        )
+        # both sides in the NEW manifest's schema: evolution is additive,
+        # so older files surface the newer columns as NULLs and the two
+        # row images compare field by field
+        n_df = self._read_generations(n_paths, new) if n_paths else None
+        o_df = self._read_generations(o_paths, new) if o_paths else None
         # An empty side takes its schema from the other side, never from
         # read() — a snapshot whose generations map is empty (a commit
         # that deleted every key) has no live buckets to read, and the
         # non-empty side's schema already includes columns added by
         # later schema evolution.
         if n_df is None and o_df is None:
-            # no changed buckets at either version — derive a schema from
-            # any live generation (or the manifest schema when both
-            # states are fully emptied) just to shape the empty result
+            # no changed buckets at either version — the manifest schema
+            # (or, on manifests that predate it, any live generation's
+            # footer) just shapes the empty result
+            schema_json = new.get("schema") or old.get("schema")
             any_gens = ng or og
-            if not any_gens:
+            if schema_json is not None:
                 import json as _json
 
-                schema_json = new.get("schema") or old.get("schema")
-                if schema_json is None:
-                    raise WarehouseError(
-                        f"no data files at either version of {table} to "
-                        "derive a CDC schema from"
-                    )
                 schema = T.StructType.fromJson(_json.loads(schema_json))
-                return (
-                    self.spark.createDataFrame([], schema)
-                    .withColumn("_change_type", F.lit("insert"))
-                    .select("_change_type", *[f.name for f in schema.fields])
+            elif any_gens:
+                schema = self.spark.read.parquet(
+                    self._bucket_gen_dir(table, *next(iter(any_gens.items())))
+                ).schema
+            else:
+                raise WarehouseError(
+                    f"no data files at either version of {table} to "
+                    "derive a CDC schema from"
                 )
-            probe = self.spark.read.parquet(
-                self._bucket_gen_dir(table, *next(iter(any_gens.items())))
-            )
             # fresh lineage-free frames: sharing one plan between the two
             # join sides trips Spark's ambiguous-self-join detection
-            n_df = self.spark.createDataFrame([], probe.schema)
-            o_df = self.spark.createDataFrame([], probe.schema)
+            n_df = self.spark.createDataFrame([], schema)
+            o_df = self.spark.createDataFrame([], schema)
         elif n_df is None:
             n_df = self.spark.createDataFrame([], o_df.schema)
         elif o_df is None:
@@ -2436,11 +2438,10 @@ class Warehouse:
         if not keep:
             return self.read(table).limit(0).filter(pred)
         if layout.get("generations") is not None:
-            # bucketed survivors: same read shape as read() — merged
-            # footers + manifest-schema conform (generation paths carry
-            # no Hive columns and reject a shared basePath; probed)
-            sub = self.spark.read.option("mergeSchema", "true").parquet(*keep)
-            return self._conform_to_stored(sub, layout).filter(pred)
+            # bucketed survivors: same read shape as read() (generation
+            # paths carry no Hive columns and reject a shared basePath;
+            # probed)
+            return self._read_generations(keep, layout).filter(pred)
         return self._read_files_with_deletes(table, keep, layout).filter(pred)
 
     def approx_distinct(
@@ -2959,10 +2960,7 @@ class Warehouse:
         elif not keep:
             sub = self.read(table).limit(0)
         elif layout.get("generations") is not None:
-            sub = self._conform_to_stored(
-                self.spark.read.option("mergeSchema", "true").parquet(*keep),
-                layout,
-            )
+            sub = self._read_generations(keep, layout)
         else:
             sub = self._read_files_with_deletes(table, keep, layout)
         if where is not None:
@@ -3422,10 +3420,7 @@ class Warehouse:
         if not keep:
             return self.read(table).limit(0)
         if layout.get("generations") is not None:
-            return self._conform_to_stored(
-                self.spark.read.option("mergeSchema", "true").parquet(*keep),
-                layout,
-            )
+            return self._read_generations(keep, layout)
         return self._read_files_with_deletes(table, keep, layout)
 
     def read_nearest_many(
@@ -3499,10 +3494,7 @@ class Warehouse:
         elif not keep:
             sub = self.read(table).limit(0)
         elif layout.get("generations") is not None:
-            sub = self._conform_to_stored(
-                self.spark.read.option("mergeSchema", "true").parquet(*keep),
-                layout,
-            )
+            sub = self._read_generations(keep, layout)
         else:
             sub = self._read_files_with_deletes(table, keep, layout)
         if where is not None:
@@ -3748,11 +3740,10 @@ class Warehouse:
         if not keep:
             return self.read(table).limit(0).filter(pred)
         if layout.get("generations") is not None:
-            # bucketed survivors: merged footers + manifest-schema
-            # conform, the same read shape as read() (generation paths
-            # carry no Hive columns and reject a shared basePath)
-            sub = self.spark.read.option("mergeSchema", "true").parquet(*keep)
-            return self._conform_to_stored(sub, layout).filter(pred)
+            # bucketed survivors: the same read shape as read()
+            # (generation paths carry no Hive columns and reject a
+            # shared basePath)
+            return self._read_generations(keep, layout).filter(pred)
         # basePath keeps Hive-style partition columns visible when
         # individual files inside partition dirs are listed explicitly;
         # conform so the result's schema equals read(table)'s even when
@@ -4463,15 +4454,12 @@ class Warehouse:
             if str(b) in gens
         ]
         if dest_paths:
-            # mergeSchema + manifest conform: touched buckets may carry
+            # manifest-schema read: touched buckets may carry
             # heterogeneous footers after an evolution (and an evolved
             # column with zero surviving rows lives ONLY in the
             # manifest) — the merge must see the full logical schema or
             # its output files would shrink it for these buckets
-            dest_touched = self._conform_to_stored(
-                self.spark.read.option("mergeSchema", "true").parquet(*dest_paths),
-                meta,
-            )
+            dest_touched = self._read_generations(dest_paths, meta)
         else:
             dest_touched = None
         batch_t = batch.drop("__bucket")
@@ -4574,13 +4562,10 @@ class Warehouse:
             ]
             if not paths:  # every key deleted — nothing to compact
                 return 0
-            # conform so the compacted files CARRY manifest-only evolved
-            # columns (self-healing: after compaction the footers and
-            # the logical schema agree again)
-            df = self._conform_to_stored(
-                self.spark.read.option("mergeSchema", "true").parquet(*paths),
-                meta,
-            )
+            # manifest-schema read, so the compacted files CARRY
+            # manifest-only evolved columns (self-healing: after
+            # compaction the footers and the logical schema agree again)
+            df = self._read_generations(paths, meta)
         else:
             df = self.read(table)
         n_rows = df.count()
@@ -4976,9 +4961,7 @@ class Warehouse:
         n_buckets = int(meta["key_bucket_count"])
         base_gen = int(meta.get("generation", -1))
         paths = [self._bucket_gen_dir(table, str(b), gens[str(b)]) for b in plan]
-        df = self._conform_to_stored(
-            self.spark.read.option("mergeSchema", "true").parquet(*paths), meta
-        )
+        df = self._read_generations(paths, meta)
         bucket_expr = F.pmod(
             F.hash(*[F.col(c) for c in key_cols]), F.lit(n_buckets)
         )

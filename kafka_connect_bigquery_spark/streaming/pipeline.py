@@ -125,15 +125,16 @@ class SinkPipeline:
     # batch's own schema for table creation/evolution.
     schema_retriever: object = None
     table_specs: dict[str, TableSpec] = dc_field(default_factory=dict)
-    # IVM consumers (operators/rollup.py:RollupMaintainer) per
+    # IVM consumers (operators/rollup.py:CdcMaintainer subclasses) per
     # destination table: after each micro-batch MERGE commits, its
     # rollups catch up through the CDC feed (cursor-tracked, so a crash
     # between merge and refresh loses nothing — next batch covers both)
     rollup_maintainers: dict[str, list] = dc_field(default_factory=dict)
     dedupe_by_offset: bool = True
     _batch_counter: int = 0
-    # frames persisted by _route_malformed for the strict/'all' probe;
-    # the batch handlers release them after their write
+    # frames persisted by _route_malformed for the strict/'all' probe
+    # and CDC spans shared by IVM consumers; the batch handlers release
+    # them after their write
     _persisted: list = dc_field(default_factory=list)
     # A3 batch counters (MergeBatches.java:146-167,305-349): per-batch
     # row/tombstone counts observed on the running plan, no extra pass.
@@ -262,7 +263,8 @@ class SinkPipeline:
 
     def _release_batch_caches(self) -> None:
         """Unpersist frames cached for the strict/DLQ malformed probe
-        (one per convert() call in 'none'/'all' modes). Called by every
+        (one per convert() call in 'none'/'all' modes) and the CDC spans
+        shared by IVM consumers. Called by every
         batch handler after its write; safe to call when empty."""
         while self._persisted:
             try:
@@ -414,8 +416,41 @@ class SinkPipeline:
                     allow_new_fields=self.config.allow_new_bigquery_fields,
                 )
             )
-            for maintainer in self.rollup_maintainers.get(table, []):
-                self._retried(maintainer.refresh)
+            self._refresh_maintainers(table)
+
+    def _refresh_maintainers(self, table: str) -> None:
+        """Bring a table's IVM consumers up to its current generation
+        with ONE CDC read per distinct applied-version cursor: consumers
+        that share a cursor (the steady state — every consumer applied
+        the previous batch) share its span, cached once for the batch
+        when two or more read it. A consumer that has never run, or
+        whose cursor snapshot was pruned, rebuilds on its own."""
+        maintainers = self.rollup_maintainers.get(table, [])
+        cur = self.warehouse.layout_meta(table).get("generation")
+        if cur is None:
+            # not bucketed: refresh() raises its own error
+            for m in maintainers:
+                self._retried(m.refresh)
+            return
+        cur = int(cur)
+        by_cursor: dict[int | None, list] = {}
+        for m in maintainers:
+            by_cursor.setdefault(m.cursor(), []).append(m)
+        for last, group in by_cursor.items():
+            changes = None
+            if (
+                last is not None
+                and last != cur
+                and last in self.warehouse.snapshots(table)
+            ):
+                changes = self.warehouse.read_changes(
+                    table, from_version=last, to_version=cur, images="both"
+                )
+                if len(group) > 1:
+                    changes = changes.persist()
+                    self._persisted.append(changes)
+            for m in group:
+                self._retried(lambda m=m: m.refresh(changes, to_version=cur))
 
     # -- path 3: batch load ---------------------------------------------
     @_releases_batch_caches

@@ -85,7 +85,11 @@ def pytest_collection_modifyitems(config, items):
         reason="slow-marked (soak); set SPARK_GRAFT_FULL_TESTS=1 to run"
     )
     for item in items:
-        nid = item.nodeid
+        # node id from the repo root whatever directory pytest runs in:
+        # the test file relative to this conftest's parent, then the
+        # rest of the node id (class / function / parameters)
+        rel = os.path.relpath(str(item.path), REPO).replace(os.sep, "/")
+        nid = "::".join([rel, *item.nodeid.split("::")[1:]])
         if "slow" in item.keywords or any(
             nid.startswith(p) for p in _SLOW_PREFIXES
         ):

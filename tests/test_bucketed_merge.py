@@ -941,3 +941,76 @@ def test_tombstone_predating_evolution_same_batch_as_evolved_upsert(
     assert "new_col" in df.columns
     out = {r["k"]: (r["v"], r["new_col"]) for r in df.collect()}
     assert out == {1: ("resurrected", "extra1"), 3: ("v3", None)}
+
+
+def _next_job_id(spark) -> int:
+    # the DAG scheduler's next job id only grows; the status store's job
+    # list is bounded and evicts, so a delta of its size can undercount
+    return int(spark.sparkContext._jsc.sc().dagScheduler().nextJobId())
+
+
+def test_bucketed_reads_start_no_job_before_an_action(spark, tmp_path):
+    """Bucketed reads take their schema from the manifest: building the
+    frame of read, read_pruned_where (plain and Bloom-pruned) and
+    read_changes launches no Spark job — no footer-merging pass over
+    the generation dirs at plan time."""
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    wh.merge(_mk(spark, [(k, f"v{k}", k, False) for k in range(40)]), "t", ["k"],
+             mode="upsert_delete", spec=SPEC)
+    wh.merge(_mk(spark, [(3, "x", 50, False), (4, None, 51, True)]), "t", ["k"],
+             mode="upsert_delete", spec=SPEC)
+    v = int(wh.layout_meta("t")["generation"])
+    builds = {
+        "read": lambda: wh.read("t"),
+        "read_pruned_where": lambda: wh.read_pruned_where("t", {"k": 3}),
+        "read_changes": lambda: wh.read_changes("t", from_version=v - 1, images="both"),
+        "read_changes_post": lambda: wh.read_changes("t", from_version=v - 1),
+    }
+    frames = {}
+    for name, build in builds.items():
+        j0 = _next_job_id(spark)
+        frames[name] = build()
+        assert _next_job_id(spark) == j0, name
+    wh.record_bloom("t", ["v"])
+    j0 = _next_job_id(spark)
+    frames["bloom_pruned"] = wh.read_pruned_where("t", {"v": "v7"})
+    assert _next_job_id(spark) == j0
+    # and the frames are the right ones
+    assert [r["k"] for r in frames["read_pruned_where"].collect()] == [3]
+    assert [r["k"] for r in frames["bloom_pruned"].collect()] == [7]
+    assert frames["read"].count() == 39
+    changes = {(r["_change_type"], r["k"]) for r in frames["read_changes"].collect()}
+    assert changes == {("update_preimage", 3), ("update_postimage", 3), ("delete", 4)}
+
+
+def test_pruned_read_of_files_predating_nested_subfield(spark, tmp_path):
+    """A Bloom-pruned bucketed read whose surviving files ALL predate a
+    nested evolution (struct<a> -> struct<a, b>) still returns the
+    manifest's struct shape, with the subfield NULL (the footer-vs-
+    manifest case Warehouse._conform_col covers on flat tables)."""
+    import pyarrow.parquet as pq
+
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    base = spark.createDataFrame(
+        [(k, f"t{k}", {"a": k}, k, False) for k in range(40)],
+        "k: bigint, tag: string, s: struct<a: bigint>, i: bigint, __tombstone: boolean",
+    )
+    wh.merge(base, "t", ["k"], mode="upsert", spec=SPEC)
+    wh.record_bloom("t", ["tag"])
+    evolved = spark.createDataFrame(
+        [(1, "t1", {"a": 10, "b": "nested"}, 99, False)],
+        "k: bigint, tag: string, s: struct<a: bigint, b: string>, i: bigint, __tombstone: boolean",
+    )
+    wh.merge(evolved, "t", ["k"], mode="upsert", spec=SPEC)
+    b = F.pmod(F.hash("id"), F.lit(N_BUCKETS)).alias("b")
+    bucket = {r["id"]: r["b"] for r in spark.range(40).select("id", b).collect()}
+    other = next(k for k in range(2, 40) if bucket[k] != bucket[1])
+    df = wh.read_pruned_where("t", {"tag": f"t{other}"})
+    files = df.inputFiles()
+    assert files and len(files) < len(wh._live_data_files("t"))
+    for f in files:
+        footer = pq.read_schema(f.removeprefix("file:"))
+        assert [c.name for c in footer.field("s").type] == ["a"], f
+    assert df.schema == wh.read("t").schema
+    rows = df.collect()
+    assert [(r["k"], r["s"]["a"], r["s"]["b"]) for r in rows] == [(other, other, None)]

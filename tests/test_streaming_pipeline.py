@@ -267,6 +267,99 @@ def test_streaming_merge_maintains_rollup(spark, tmp_path):
     assert snap("t_by_name_lag") == recomputed()
 
 
+def test_streaming_ivm_is_incremental_with_one_cdc_read_per_batch(
+    spark, tmp_path, monkeypatch
+):
+    """A rollup and an HLL sketch attached to one table stay EQUAL to a
+    direct rebuild batch after batch WITHOUT rebuilding: after the first
+    batch both ``_rebuild`` methods raise, so every later refresh must
+    take the incremental path. Both consumers share one CDC read per
+    batch, and the rollup table carries no ingestion-time partition
+    column (a ``p_date`` there would break the incremental delta)."""
+    from kafka_connect_bigquery_spark.operators import rollup as R
+    from kafka_connect_bigquery_spark.operators import sketch as SK
+    from kafka_connect_bigquery_spark.sinks.warehouse import TableSpec
+
+    wh = Warehouse(spark, str(tmp_path / "wh"))
+    cfg = SinkConfig(
+        topics=["t"],
+        upsert_enabled=True,
+        delete_enabled=True,
+        errors_tolerance="none",
+        kafka_key_field_name="kkey",
+    )
+    measures = {"n": F.lit(1).cast("bigint"), "sum_row": F.col("row").cast("bigint")}
+    rollup = R.RollupMaintainer(
+        wh, "t", "t_by_name", ["name"], measures, count_measure="n"
+    )
+    hll = SK.SketchMaintainer(wh, "t", "t_row_hll", "row", ["name"], kind="hll")
+    pipe = SinkPipeline(
+        warehouse=wh,
+        config=cfg,
+        value_parser=lambda c: F.from_json(c.cast("string"), VALUE_SCHEMA),
+        key_parser=lambda c: c.cast("string"),
+        table_specs={"t": TableSpec(partition_grain="NONE", key_bucket_count=4)},
+        rollup_maintainers={"t": [rollup, hll]},
+    )
+    batches = [
+        [
+            ("u1", {"row": 1, "name": "a"}, "t", 0, 0),
+            ("u2", {"row": 2, "name": "a"}, "t", 0, 1),
+            ("u3", {"row": 3, "name": "b"}, "t", 0, 2),
+        ],
+        [
+            ("u1", {"row": 4, "name": "b"}, "t", 0, 3),  # group move a->b
+            ("u3", None, "t", 0, 4),                      # delete
+            ("u4", {"row": 5, "name": "c"}, "t", 0, 5),   # new group
+        ],
+        [
+            ("u2", {"row": 6, "name": "a"}, "t", 0, 6),   # in-group update
+            ("u4", None, "t", 0, 7),                      # group emptied
+            ("u5", {"row": 7, "name": "b"}, "t", 0, 8),
+        ],
+    ]
+
+    def rows(df, *cols):
+        return {tuple(r) for r in df.select(*cols).collect()}
+
+    def check():
+        src = wh.read_bucketed("t")
+        assert rows(wh.read("t_by_name"), "name", "n", "sum_row") == rows(
+            R.build_rollup(src, ["name"], measures), "name", "n", "sum_row"
+        )
+        assert rows(wh.read("t_row_hll"), "name", "register", "rho") == rows(
+            SK.hll_build_grouped(src, "row", ["name"]), "name", "register", "rho"
+        )
+
+    def run(i):
+        batch = spark.createDataFrame(_kafka_rows(batches[i]), KAFKA_SCHEMA)
+        pipe.merge_batch(batch, i, key_cols=["kkey"])
+
+    run(0)
+    check()
+
+    def no_rebuild(self):
+        raise AssertionError(f"{type(self).__name__} rebuilt instead of applying its CDC span")
+
+    monkeypatch.setattr(R.RollupMaintainer, "_rebuild", no_rebuild)
+    monkeypatch.setattr(SK.SketchMaintainer, "_rebuild", no_rebuild)
+    calls = []
+    read_changes = Warehouse.read_changes
+
+    def counted(self, *a, **kw):
+        calls.append(kw.get("from_version"))
+        return read_changes(self, *a, **kw)
+
+    monkeypatch.setattr(Warehouse, "read_changes", counted)
+    for i in (1, 2):
+        calls.clear()
+        run(i)
+        assert len(calls) == 1, calls
+        check()
+    assert rollup.cursor() == hll.cursor() == int(wh.layout_meta("t")["generation"])
+    assert "p_date" not in wh.read("t_by_name").columns
+
+
 def test_upsert_delete_with_bucketed_layout(spark, tmp_path):
     """The streaming merge path honors TableSpec.key_bucket_count:
     state lands in a __bucket= layout and upsert/delete semantics hold."""
